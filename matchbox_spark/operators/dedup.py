@@ -283,7 +283,7 @@ def ngram_jaccard_pairs(
     # shingle corpus: 36.5M expansion rows → 12.5M cross pairs × 15-long
     # AND/popcount; interleaved warm A/B ~3× faster, identical output).
     # Gates keep it honest at scale: the vocabulary must fit the cap (env-
-    # overridable) AND the cross-pair count must not exceed 4× the posting
+    # overridable) AND the cross-pair count must not exceed 8× the posting
     # fan-out (a huge sparse corpus with a tiny vocabulary keeps the
     # posting path; both quantities derive from the same probe). The
     # probe's cost is one linear aggregate — noise next to either

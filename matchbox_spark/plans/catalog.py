@@ -27,6 +27,23 @@ and pay one lazy full-table filter. Temporary caches used inside an insert
 are explicitly unpersisted once the delta is materialised. State persists
 as parquet partitioned by source/step (partition pruning serves the query
 layer's filters).
+
+Driver path: while every prior mutation of a table went through this path,
+the catalog keeps a complete driver-side mirror of it (the ``_driver_*``
+attributes; any other mutation drops the mirror to None, see
+``_MIRRORS``). A source-index insert runs on the driver when the mirrors it
+reads are live and the optimizer's size estimate of the index is at most
+``MATCHBOX_SPARK_INDEX_DRIVER_BYTES`` (256 MiB; 0 disables the path): one
+collect, then mirror lookups and pandas-built LocalRelation appends. A
+resolver insert or merge runs there when its assignments are already
+driver-resident and the mirrors are live, with zero Spark jobs. Either way
+the catalog is byte-identical to the distributed path's: the same
+insert-if-absent by content hash (U6), G4 leaf expansion, H5 parent hash
+(a parent with no member in ``clusters`` has no root), dense ids in
+unsigned byte order of the new hashes, per-array key dedup and
+fingerprints. ``tests/test_catalog_driver_path.py`` and
+``tests/test_streaming_delta_merge.py`` pin the contract by running both
+paths and comparing every table.
 """
 
 from __future__ import annotations
@@ -128,6 +145,27 @@ _SCHEMAS = {
 # bounds union width (planning cost) without rewriting state per mutation.
 _COMPACT_WIDTH = 12
 
+# table → its driver mirror attribute. Non-None ⇒ the mirror equals the
+# table; every mutation drops it, and the driver path re-sets it after its
+# own append (it holds the appended rows).
+_MIRRORS = {
+    "clusters": "_driver_cluster_hashes",
+    "contains": "_driver_contains",
+    "cluster_keys": "_driver_step_keys",
+    "resolver_clusters": "_driver_rc",
+    "model_edges": "_driver_step_edges",
+}
+
+
+def _index_driver_bytes() -> int:
+    """Driver-path budget for a source-index insert (0 disables it)."""
+    try:
+        return int(
+            os.environ.get("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", str(256 << 20))
+        )
+    except ValueError:
+        return 256 << 20
+
 
 class Catalog:
     """In-session cluster store with optional parquet persistence."""
@@ -146,23 +184,10 @@ class Catalog:
         self._assign_temp: DataFrame | None = None
         self._contains_empty = True
         self._clusters_empty = True
-        # False until a resolver insert lands: while every cluster row is a
-        # source-index LEAF hash, a freshly-computed H5 parent hash cannot
-        # legitimately pre-exist (insert-if-absent only matters for
-        # re-inserted resolver content), so the local resolver path may
-        # skip its exists-check job. Loaded catalogs pessimistically True.
-        self._has_parent_clusters = False
-        # Complete driver-side mirror of the clusters table content
-        # (cluster_id → cluster_hash), maintained ONLY while every clusters
-        # mutation went through a driver-local insert (which already holds
-        # the rows it appends). Lets the local resolver insert resolve leaf
-        # hashes and the exists-check by dict lookup — zero Spark jobs —
-        # instead of two broadcast semi-join collects. Any other clusters
-        # mutation (distributed insert, delta merge, snapshot re-point)
-        # invalidates it to None via _append/_commit/_load; lookups then
-        # fall back to the distributed jobs. Invariant: non-None ⇒ the dict
-        # equals the full clusters table, so a dict miss IS a table miss.
-        # A fresh catalog is empty, so the empty dict IS a complete mirror.
+        # Driver mirrors (see _MIRRORS and the module docstring). The
+        # clusters mirror maps cluster_id → cluster_hash; complete means a
+        # dict miss IS a table miss. A fresh catalog is empty, so the empty
+        # dict IS a complete mirror.
         self._driver_cluster_hashes: dict[int, bytes] | None = {}
         # Same contract for contains (root → sorted leaf tuple): complete
         # while every contains mutation was a driver-local resolver insert.
@@ -488,19 +513,7 @@ class Catalog:
             r["step"]: json.loads(r["meta"])
             for r in spark.table(f"{database}.steps_meta").collect()
         }
-        row = cat.clusters.agg(
-            F.max("cluster_id").alias("m"), F.count("*").alias("n")
-        ).collect()[0]
-        cat._max_id = int(row["m"] or 0)
-        cat._clusters_empty = int(row["n"]) == 0
-        cat._contains_empty = cat.contains.limit(1).isEmpty()
-        cat._has_parent_clusters = not cat._clusters_empty
-        cat._driver_cluster_hashes = None  # disk content: mirrors unknown
-        cat._driver_contains = None
-        cat._driver_step_keys = None
-        cat._driver_rc = None
-        cat._driver_step_edges = None
-        cat._loaded_from_disk = True
+        cat._read_loaded_state()
         return cat
 
     def _check_snapshot_generation(self) -> None:
@@ -554,18 +567,18 @@ class Catalog:
                 self._parts[name] = [
                     self.spark.read.schema(_SCHEMAS[name]).parquet(p)
                 ]
+        self._read_loaded_state()
+
+    def _read_loaded_state(self) -> None:
+        """Id watermark and emptiness flags of freshly loaded tables."""
         row = self.clusters.agg(
             F.max("cluster_id").alias("m"), F.count("*").alias("n")
         ).collect()[0]
         self._max_id = int(row["m"] or 0)
         self._clusters_empty = int(row["n"]) == 0
         self._contains_empty = self.contains.limit(1).isEmpty()
-        self._has_parent_clusters = not self._clusters_empty
-        self._driver_cluster_hashes = None  # disk content: mirrors unknown
-        self._driver_contains = None
-        self._driver_step_keys = None
-        self._driver_rc = None
-        self._driver_step_edges = None
+        for attr in _MIRRORS.values():
+            setattr(self, attr, None)  # disk content: mirrors unknown
         self._loaded_from_disk = True
 
     # -- helpers -------------------------------------------------------------
@@ -590,6 +603,12 @@ class Catalog:
             w[:] = [1 << 30] * len(self._parts[name])
         return w
 
+    def _drop_mirror(self, name: str) -> None:
+        """Blanket invalidation on every mutation of ``name``, so no path
+        can forget; the driver path re-sets the mirror after its append."""
+        if name in _MIRRORS:
+            setattr(self, _MIRRORS[name], None)
+
     def _append(self, name: str, delta: DataFrame, materialised: bool = False) -> None:
         """Append one immutable delta; amortised O(delta · log n), never an
         O(total state) spike on one unlucky mutation.
@@ -608,20 +627,7 @@ class Catalog:
         compacted base, under the old _COMPACT_WIDTH bound in practice
         (the bound remains as a backstop for pathological weight states).
         """
-        if name == "clusters":
-            # blanket invalidation of the driver clusters mirror: the two
-            # driver-local insert paths re-set/extend it right after their
-            # own append (they hold the appended rows), every other mutator
-            # drops it here so no path can forget
-            self._driver_cluster_hashes = None
-        elif name == "contains":
-            self._driver_contains = None  # same contract
-        elif name == "cluster_keys":
-            self._driver_step_keys = None  # same contract
-        elif name == "resolver_clusters":
-            self._driver_rc = None  # same contract
-        elif name == "model_edges":
-            self._driver_step_edges = None  # same contract
+        self._drop_mirror(name)
         if not materialised and not _is_driver_resident(delta):
             # driver-resident deltas have no lineage worth truncating, and
             # checkpointing would throw away their exact size estimate
@@ -670,16 +676,7 @@ class Catalog:
         Append paths should use ``_append``; this exists for the rare
         filter-out-a-step mutations and external callers (streaming merge).
         """
-        if name == "clusters":
-            self._driver_cluster_hashes = None  # see _append
-        elif name == "contains":
-            self._driver_contains = None
-        elif name == "cluster_keys":
-            self._driver_step_keys = None
-        elif name == "resolver_clusters":
-            self._driver_rc = None
-        elif name == "model_edges":
-            self._driver_step_edges = None
+        self._drop_mirror(name)
         self._parts[name] = [self._ckpt(df, eager=False)]
         self._part_weights[name] = [1 << 30]  # fully-compacted run
 
@@ -700,6 +697,121 @@ class Catalog:
         df = self.spark.createDataFrame(pdf, schema)
         df._mb_driver_resident = True
         return df
+
+    def _claims_df(self, step: str, cluster_ids: list[int]) -> DataFrame:
+        """``resolver_clusters`` rows of one step as a LocalRelation. Built
+        via pandas, not a plain list: a list lands as an RDD scan whose
+        unknown size estimate forces sort-merge plans onto every downstream
+        retrieval join."""
+        import pandas as pd
+
+        return self._local_df(
+            pd.DataFrame(
+                {
+                    "step": [step] * len(cluster_ids),
+                    "cluster_id": pd.array(cluster_ids, dtype="int64"),
+                }
+            ),
+            _RESOLVER,
+        )
+
+    def _collect_index_local(self, index: DataFrame, project=None):
+        """The source-index driver path's budget gate and its one job.
+
+        Collects ``index`` (``hash`` renamed ``cluster_hash``, then
+        ``project``-ed) as pandas when the optimizer's size estimate fits
+        :func:`_index_driver_bytes`; None otherwise. The estimate is read
+        driver-side, so an over-budget index costs no job."""
+        limit = _index_driver_bytes()
+        if limit <= 0:
+            return None
+        try:
+            est = int(
+                str(index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            )
+        except Exception:  # noqa: BLE001 — estimation only; general path
+            return None
+        if est > limit:
+            return None
+        frame = index.select(
+            F.col("hash").alias("cluster_hash"),
+            *[c for c in index.columns if c != "hash"],
+        )
+        return (project(frame) if project else frame).toPandas()
+
+    def _mint_clusters_local(self, hashes: Iterable[bytes]) -> dict[bytes, int]:
+        """Insert-if-absent by content hash against the live clusters
+        mirror; returns hash → cluster_id for every hash in ``hashes``.
+
+        New hashes get dense ids above the watermark in unsigned byte order
+        (what ``_assign_ids``'s digest-prefix buckets produce) and land in
+        one LocalRelation append; the mirror and the id bookkeeping follow.
+        """
+        import pandas as pd
+
+        cmirror = self._driver_cluster_hashes
+        want = set(hashes)
+        id_of = {h: i for i, h in cmirror.items() if h in want}
+        new = sorted(want.difference(id_of))
+        ids = list(range(self._max_id + 1, self._max_id + 1 + len(new)))
+        if new:
+            self._append(
+                "clusters",
+                self._local_df(
+                    pd.DataFrame(
+                        {
+                            "cluster_id": pd.array(ids, dtype="int64"),
+                            "cluster_hash": new,
+                        }
+                    ),
+                    _CLUSTERS,
+                ),
+                materialised=True,
+            )
+            cmirror.update(zip(ids, new))
+            id_of.update(zip(new, ids))
+            self._clusters_empty = False
+        self._driver_cluster_hashes = cmirror
+        self._max_id += len(new)
+        self._last_assigned_n = len(new)
+        return id_of
+
+    def _append_keys_local(self, step: str, hash_bytes, keys, id_of) -> None:
+        """Append ``step``'s ``cluster_keys`` rows for a collected index:
+        per-array first-occurrence dedup (the ``array_distinct`` twin),
+        minus the ``(cluster_id, key)`` pairs the live step keys mirror
+        already holds, so a replayed batch appends nothing. Keeps that
+        mirror complete."""
+        import pandas as pd
+
+        skmirror = self._driver_step_keys
+        seen = set() if skmirror is None else skmirror.setdefault(step, set())
+        key_ids: list[int] = []
+        key_vals: list = []
+        for hb, ks in zip(hash_bytes, keys.tolist()):
+            cid = id_of[hb]
+            for k in dict.fromkeys(ks.tolist() if hasattr(ks, "tolist") else ks):
+                if (cid, k) not in seen:
+                    key_ids.append(cid)
+                    key_vals.append(k)
+        if key_ids:
+            self._append(
+                "cluster_keys",
+                self._local_df(
+                    pd.DataFrame(
+                        {
+                            "cluster_id": pd.array(key_ids, dtype="int64"),
+                            "source": step,
+                            "key": key_vals,
+                        }
+                    ),
+                    _KEYS,
+                ),
+                materialised=True,
+            )
+        if skmirror is not None:
+            seen.update(zip(key_ids, key_vals))
+            self._driver_step_keys = skmirror
 
     # Digest-prefix bucket: the first two bytes of a hash digest are uniform,
     # so fixed-width buckets on them give balanced ORDERED ranges with zero
@@ -819,11 +931,7 @@ class Catalog:
         """
         # index is groupBy-output (unique by hash) — no distinct needed
         self._release_assign_temp()  # deferred from a prior lazy assignment
-        if (
-            (self._clusters_empty or self._driver_cluster_hashes is not None)
-            and fingerprint is None
-            and self._insert_source_index_local(step, index)
-        ):
+        if fingerprint is None and self._insert_source_index_local(step, index):
             return
         if self._clusters_empty and fingerprint is None:
             # first insert into an empty catalog: every hash is new, so TWO
@@ -949,91 +1057,30 @@ class Catalog:
         }
 
     def _insert_source_index_local(self, step: str, index: DataFrame) -> bool:
-        """Driver-scale :meth:`insert_source_index` (empty catalog OR live
-        driver clusters mirror, small index): ONE Spark job instead of
-        three serial stage rounds.
-
-        r13 extension beyond the first insert: while the clusters mirror is
-        complete (every prior clusters mutation was itself driver-local),
-        the subsequent-insert anti-join against existing clusters and the
-        keys→cluster-id join are dict lookups over the mirror — identical
-        answers by the completeness invariant — so a multi-source pipeline
-        (the j7b linked DAG) keeps the one-job shape for every source.
-
-        The distributed first-insert branch pays a stats collect (bucket
-        counts + fingerprint) and then a "lazy" assignment checkpoint that
-        is not lazy under AQE — finalising the adaptive plan executes the
-        window's shuffle stages at checkpoint time, one more serial stage
-        round per source step (the j7 serial-action floor). When the
-        optimizer's size estimate for the index plan fits a driver budget,
-        collect ``(hash, keys, _h)`` once — the per-row xxhash64 stays
-        JVM-computed, so the fingerprint fold is over the identical
-        numbers — and do the rest driver-side. Byte-identical outcome:
-
-        - fingerprint: fold of (n, Σ_h, ⊕_h) over the collected signed
-          64-bit row hashes == the per-bucket ``unordered_stats_aggs``
-          fold (associative; a single global group is one valid grouping);
-        - ids: dense 1..n by unsigned bytewise hash order — the bucket is
-          the hash's first two bytes, so (bucket asc, hash asc) IS global
-          hash order (what ``dense_index`` over digest-prefix buckets +
-          per-bucket BinaryType windows produces);
-        - keys: per-array first-occurrence dedup (``array_distinct``).
-
-        The appends are LocalRelations (no jobs), which also lets every
-        downstream join against ``clusters``/``cluster_keys`` broadcast
-        without computing a plan. Returns False (caller falls through to
-        the distributed branch) when the estimate exceeds the budget —
-        the estimate is read from the optimized plan driver-side, so the
-        decision costs no job and a 100 TB index never collects.
-        ``MATCHBOX_SPARK_INDEX_DRIVER_BYTES`` overrides the budget
-        (0 disables the path)."""
-        import os
-
-        try:
-            limit = int(
-                os.environ.get(
-                    "MATCHBOX_SPARK_INDEX_DRIVER_BYTES", str(256 << 20)
-                )
-            )
-        except ValueError:
-            limit = 256 << 20
-        if limit <= 0:
+        """Driver path of :meth:`insert_source_index` (see the module
+        docstring): one collect of ``(hash, keys, _h)`` instead of the
+        distributed branch's stats collect plus assignment checkpoint. The
+        per-row xxhash64 stays JVM-computed, so the fingerprint folds the
+        same numbers (one global group is one valid grouping of the
+        associative stats). Returns False to fall through."""
+        if (
+            self._driver_cluster_hashes is None
+            # rare rewrite path: keep the distributed branch's filter
+            or self._step_has_rows("cluster_keys", "source", step)
+        ):
             return False
-        if self._step_has_rows("cluster_keys", "source", step):
-            # rare rewrite path (re-sync over disk-loaded or pre-existing
-            # step rows) — keep the distributed branch's filter semantics
-            return False
-        cmirror = self._driver_cluster_hashes
-        if cmirror is None:
-            # no complete mirror: the anti-join against existing clusters
-            # needs the cluster table — fall through to distributed
-            return False
-        try:
-            est = int(
-                str(
-                    index._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:  # noqa: BLE001 — estimation only; general path
-            return False
-        if est > limit:
-            return False
-
-        import numpy as np
-        import pandas as pd
-
-        from matchbox_spark.functions.hashing import (
-            fold_unordered_stats,
-            row_hash_expr,
+        pdf = self._collect_index_local(
+            index,
+            lambda ix: ix.select(
+                "cluster_hash",
+                "keys",
+                row_hash_expr(
+                    ix.schema, ["cluster_hash", "keys"], "xxhash64"
+                ).alias("_h"),
+            ),
         )
-
-        index = index.select(F.col("hash").alias("cluster_hash"), "keys")
-        h = row_hash_expr(index.schema, ["cluster_hash", "keys"], "xxhash64")
-        pdf = index.select("cluster_hash", "keys", h.alias("_h")).toPandas()
-
+        if pdf is None:
+            return False
         hs = [int(v) for v in pdf["_h"].tolist()]
         x = 0
         for v in hs:
@@ -1045,87 +1092,9 @@ class Catalog:
         )
         if self._fingerprint_gate(step, fingerprint):
             return True
-
-        n = len(pdf)
         hash_bytes = [bytes(b) for b in pdf["cluster_hash"]]
-        # anti-join vs existing clusters as a mirror lookup (first insert:
-        # empty mirror ⇒ every hash is new, identical to the old body)
-        rev = {h: i for i, h in cmirror.items()}
-        new_pos = [j for j, h in enumerate(hash_bytes) if h not in rev]
-        n_new = len(new_pos)
-        id_of = rev
-        if n_new:
-            nh = [hash_bytes[j] for j in new_pos]
-            hashes = np.frombuffer(b"".join(nh), dtype=np.uint8).reshape(
-                n_new, -1
-            )
-            # exact unsigned bytewise order (last lexsort key is primary)
-            order = np.lexsort(
-                tuple(hashes[:, i] for i in reversed(range(hashes.shape[1])))
-            )
-            rank = np.empty(n_new, dtype="int64")
-            rank[order] = np.arange(1, n_new + 1)
-            new_ids = rank + self._max_id
-            self._append(
-                "clusters",
-                self._local_df(
-                    pd.DataFrame(
-                        {
-                            "cluster_id": pd.array(new_ids, dtype="int64"),
-                            "cluster_hash": nh,
-                        }
-                    ),
-                    _CLUSTERS,
-                ),
-                materialised=True,
-            )
-            id_of = dict(rev)
-            id_of.update(zip(nh, new_ids.tolist()))
-        skmirror = self._driver_step_keys
-        key_ids: list[int] = []
-        key_vals: list = []
-        if n:
-            for hb, keys in zip(hash_bytes, pdf["keys"].tolist()):
-                cid = id_of[hb]
-                uniq = dict.fromkeys(
-                    keys.tolist() if hasattr(keys, "tolist") else keys
-                )
-                key_ids.extend([cid] * len(uniq))
-                key_vals.extend(uniq)
-            self._append(
-                "cluster_keys",
-                self._local_df(
-                    pd.DataFrame(
-                        {
-                            "cluster_id": pd.array(key_ids, dtype="int64"),
-                            "source": step,
-                            "key": key_vals,
-                        }
-                    ),
-                    _KEYS,
-                ),
-                materialised=True,
-            )
-        if skmirror is not None:
-            # re-establish the per-step keys mirror AFTER the append (which
-            # blanket-invalidates): the step had no prior rows (gated
-            # above), so its full pair set is exactly the appended rows
-            skmirror[step] = {
-                (int(i), str(k)) for i, k in zip(key_ids, key_vals)
-            }
-            self._driver_step_keys = skmirror
-        # (re)establish the driver clusters mirror AFTER the appends (which
-        # blanket-invalidate): prior mirror + exactly the appended new rows
-        # is again the whole table — the local resolver insert can then
-        # resolve leaf hashes / exists-checks by dict lookup, no jobs
-        if n_new:
-            cmirror.update(
-                (int(i), h) for h, i in zip(nh, new_ids.tolist())
-            )
-            self._clusters_empty = False
-        self._driver_cluster_hashes = cmirror
-        self._last_assigned_n = n_new
-        self._max_id += n_new
+        id_of = self._mint_clusters_local(hash_bytes)
+        self._append_keys_local(step, hash_bytes, pdf["keys"], id_of)
         self._step_rows["cluster_keys"].add(step)
         self.steps[step] = {
             "type": "source",
@@ -1152,143 +1121,19 @@ class Catalog:
     def _insert_source_index_delta_local(
         self, step: str, index: DataFrame, return_pdf: bool = False
     ):
-        """Driver-scale :meth:`insert_source_index_delta` (live clusters +
-        per-step keys mirrors, small delta): ONE Spark job (the Arrow
-        collect of the batch index) instead of the distributed path's
-        persist + anti-join/assignment checkpoint + keys checkpoint serial
-        stage rounds — the dominant per-micro-batch indexing cost in
-        ``incremental_resolve_stream`` (optimization r13, guide §5 "the
-        driver should do almost no data work" inverted: at micro-batch
-        scale the JOBS are the cost, and the rows already fit the same
-        driver budget the non-delta local insert uses).
-
-        Byte-identical outcome to the distributed delta path:
-
-        - new hashes = delta hashes absent from the clusters mirror (the
-          anti-join; a mirror miss IS a table miss by completeness);
-        - ids dense by unsigned bytewise hash order over the new set
-          (what ``_assign_ids``'s digest-prefix buckets + per-bucket
-          BinaryType windows produce);
-        - keys: per-array first-occurrence dedup (``array_distinct``
-          twin), then pair-level insert-if-absent against the step's
-          (cluster_id, key) mirror — the delta path's anti-join.
-
-        Gated like :meth:`_insert_source_index_local`: the optimizer's
-        size estimate for the delta plan must fit
-        ``MATCHBOX_SPARK_INDEX_DRIVER_BYTES`` (read driver-side, no job —
-        a 100 TB delta never collects), and every mirror it reads must be
-        live (any prior distributed mutation invalidated them and this
-        returns False). Idempotent under batch replay like the distributed
-        path: replayed hashes hit the mirror, replayed pairs hit the step
-        set, nothing appends."""
-        import os
-
-        try:
-            limit = int(
-                os.environ.get(
-                    "MATCHBOX_SPARK_INDEX_DRIVER_BYTES", str(256 << 20)
-                )
-            )
-        except ValueError:
-            limit = 256 << 20
-        if limit <= 0:
+        """Driver path of :meth:`insert_source_index_delta` (see the module
+        docstring): one collect of the batch index instead of the
+        distributed path's persist and two checkpoints per micro-batch.
+        Pairs already in the step's keys mirror are skipped, so a replayed
+        batch appends nothing. Returns False to fall through."""
+        if self._driver_cluster_hashes is None or self._driver_step_keys is None:
             return False
-        cmirror = self._driver_cluster_hashes
-        skmirror = self._driver_step_keys
-        if cmirror is None or skmirror is None:
+        pdf = self._collect_index_local(index)
+        if pdf is None:
             return False
-        try:
-            est = int(
-                str(
-                    index._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:  # noqa: BLE001 — estimation only; general path
-            return False
-        if est > limit:
-            return False
-
-        import numpy as np
-        import pandas as pd
-
-        pdf = index.select(
-            F.col("hash").alias("cluster_hash"),
-            *[c for c in index.columns if c != "hash"],
-        ).toPandas()
         hash_bytes = [bytes(b) for b in pdf["cluster_hash"]]
-
-        rev = {h: i for i, h in cmirror.items()}
-        new_pos = [j for j, h in enumerate(hash_bytes) if h not in rev]
-        n_new = len(new_pos)
-        id_of = rev
-        if n_new:
-            nh = [hash_bytes[j] for j in new_pos]
-            hashes = np.frombuffer(b"".join(nh), dtype=np.uint8).reshape(
-                n_new, -1
-            )
-            order = np.lexsort(
-                tuple(hashes[:, i] for i in reversed(range(hashes.shape[1])))
-            )
-            rank = np.empty(n_new, dtype="int64")
-            rank[order] = np.arange(1, n_new + 1)
-            new_ids = rank + self._max_id
-            self._append(
-                "clusters",
-                self._local_df(
-                    pd.DataFrame(
-                        {
-                            "cluster_id": pd.array(new_ids, dtype="int64"),
-                            "cluster_hash": nh,
-                        }
-                    ),
-                    _CLUSTERS,
-                ),
-                materialised=True,
-            )
-            id_of = dict(rev)
-            id_of.update(zip(nh, (int(i) for i in new_ids)))
-            cmirror.update(
-                (int(i), h) for h, i in zip(nh, new_ids.tolist())
-            )
-            self._clusters_empty = False
-        self._driver_cluster_hashes = cmirror
-        self._last_assigned_n = n_new
-        self._max_id += n_new
-
-        stepset = skmirror.setdefault(step, set())
-        key_ids: list[int] = []
-        key_vals: list = []
-        for hb, keys in zip(hash_bytes, pdf["keys"].tolist()):
-            cid = int(id_of[hb])
-            uniq = dict.fromkeys(
-                keys.tolist() if hasattr(keys, "tolist") else keys
-            )
-            for k in uniq:
-                if (cid, k) not in stepset:
-                    key_ids.append(cid)
-                    key_vals.append(k)
-        if key_ids:
-            self._append(
-                "cluster_keys",
-                self._local_df(
-                    pd.DataFrame(
-                        {
-                            "cluster_id": pd.array(key_ids, dtype="int64"),
-                            "source": step,
-                            "key": key_vals,
-                        }
-                    ),
-                    _KEYS,
-                ),
-                materialised=True,
-            )
-            stepset.update(zip(key_ids, key_vals))
-        # the appends invalidated the keys mirror; stepset was updated with
-        # exactly the appended delta, so the dict is complete again
-        self._driver_step_keys = skmirror
+        id_of = self._mint_clusters_local(hash_bytes)
+        self._append_keys_local(step, hash_bytes, pdf["keys"], id_of)
         self._step_rows["cluster_keys"].add(step)
         self.steps[step] = {
             "type": "source",
@@ -1296,7 +1141,7 @@ class Catalog:
             "streaming": True,
         }
         if return_pdf:
-            pdf["cluster_id"] = [int(id_of[h]) for h in hash_bytes]
+            pdf["cluster_id"] = [id_of[h] for h in hash_bytes]
             return pdf
         return True
 
@@ -1605,20 +1450,9 @@ class Catalog:
                 or _is_local_plan(assignments)
             )
         ):
-            # the resolver's auto probe already ran union-find on the
-            # driver (assignments is a LocalRelation) and the whole
-            # hierarchy so far is driver-mirrored (complete contains +
-            # clusters dicts — r13 extension; previously first-insert
-            # only): content-address driver-side — G4 expansion, H5 member
-            # hashes, insert-if-absent — with ZERO Spark jobs instead of
-            # ~18 serial AQE stage-jobs of distributed groupBys, the j7
-            # serial-action floor VERDICT r10 flagged. Scale-safe by
-            # construction: the data volume is bounded by the resolver's
-            # own driver-path decision, and the mirrors exist only while
-            # every prior mutation was itself driver-local. The
-            # distributed path below stays the general case (distributed
-            # assignments, distributed prior hierarchy, or fingerprint
-            # not precomputed).
+            # the resolver's driver union-find already holds the
+            # assignments and the hierarchy so far is mirrored: zero jobs
+            # instead of ~18 serial AQE stage-jobs of distributed groupBys
             self._insert_resolver_clusters_local(step, assignments, fingerprint)
             return
         # caches (not checkpoints): reused by several derivations below, then
@@ -1661,154 +1495,79 @@ class Catalog:
     def _insert_resolver_clusters_local(
         self, step: str, assignments: DataFrame, fingerprint: bytes
     ) -> None:
-        """Driver-scale :meth:`insert_resolver_clusters` (driver-mirrored
-        hierarchy, LocalRelation assignments, precomputed fingerprint).
-
-        Byte-identical outcome to the distributed path: same G4 expansion
-        (a child that is a prior root expands to its contains leaves — the
-        contains mirror is complete, so a dict miss IS "child is a leaf"),
-        same H5 member hashes (``hash_cluster_leaves`` is the driver twin
-        of ``leaf_set_hash_expr``), same dense id order (sorted hash bytes
-        — what ``dense_index`` over digest-prefix buckets produces), same
-        insert-if-absent content addressing, same append-only contains
-        (only newly-assigned roots contribute rows). ZERO Spark actions
-        (r13: the former leaf-hash and exists-check semi-join collects are
-        mirror lookups); the appends are LocalRelations, costing no jobs."""
+        """Driver path of :meth:`insert_resolver_clusters` (see the module
+        docstring): :meth:`_hierarchy_insert_local`, then the step's claims
+        replace any it held. Zero Spark jobs."""
         if self._fingerprint_gate(step, fingerprint):
             return
-        import pandas as pd
-
         apdf = getattr(assignments, "_mb_local_pdf", None)
         if apdf is None:
             apdf = assignments.toPandas()  # LocalRelation: Arrow, driver-side
-        if apdf.empty:
-            # an all-singleton resolver step legitimately claims nothing,
-            # but it must still register in the claim mirror (empty set)
-            # and the step-row inventory like the distributed path does —
-            # otherwise resolver_assignments falls off the mirror-native
-            # path onto the join fallback for this lineage level forever
-            if self._driver_rc is not None:
-                self._driver_rc[step] = set()
-            self._step_rows["resolver_clusters"].add(step)
-            self.steps[step] = {
-                "type": "resolver",
-                "fingerprint": hash_to_base64(fingerprint),
-            }
-            return
-        parents: dict[int, set[int]] = {}
-        for p, c in zip(apdf["parent_id"].tolist(), apdf["child_id"].tolist()):
-            parents.setdefault(int(p), set()).add(int(c))
-
-        # G4 expansion via the complete contains mirror (the distributed
-        # path's left join + coalesce): a child claimed as a prior root
-        # expands to its leaves, anything else is its own leaf
-        kmirror = self._driver_contains
-        first_hierarchy_insert = self._contains_empty
-        expanded = {
-            p: {
-                leaf
-                for c in members
-                for leaf in (kmirror.get(c) or (c,))
-            }
-            for p, members in parents.items()
-        }
-
-        # member leaf hashes from the complete clusters mirror — a mirror
-        # miss IS a table miss, mirroring the distributed inner join:
-        # members missing from clusters drop from the member HASH but
-        # still land in contains
-        cmirror = self._driver_cluster_hashes
-        parent_hash = {
-            p: hash_cluster_leaves(
-                cmirror[c] for c in leaves if c in cmirror
-            )
-            for p, leaves in expanded.items()
-        }
-
-        # job 2: insert-if-absent — which parent hashes already exist.
-        # Skipped while no resolver has ever inserted: every cluster row is
-        # then a source-index LEAF hash, and a fresh H5 member-set hash
-        # matching one is a sha256 collision across structurally different
-        # preimages — below the collision floor the content addressing
-        # already rests on. One serial driver job saved per first-resolver
-        # step (the common single-resolver pipeline shape).
-        hashes = sorted(set(parent_hash.values()))
-        existing: dict[bytes, int] = {}
-        if self._has_parent_clusters:
-            if cmirror is not None:
-                # exists-check via the mirror (invert id→hash once): same
-                # insert-if-absent answer as the semi-join, zero jobs
-                want = set(hashes)
-                existing = {
-                    h: i for i, h in cmirror.items() if h in want
-                }
-            else:
-                hdf = self.spark.createDataFrame(
-                    pd.DataFrame({"cluster_hash": hashes}), "cluster_hash binary"
+        # claims cover EVERY root of the batch, pre-existing ones included
+        roots = sorted({r for r, _ in self._hierarchy_insert_local(apdf)})
+        rcmirror = self._driver_rc
+        if self._step_has_rows("resolver_clusters", "step", step):
+            self._commit_resolver_clusters(
+                self.resolver_clusters.where(F.col("step") != step).unionByName(
+                    self._claims_df(step, roots)
                 )
-                epdf = self.clusters.join(
-                    F.broadcast(hdf), "cluster_hash", "left_semi"
-                ).toPandas()
-                existing = {
-                    bytes(h): int(i)
-                    for h, i in zip(
-                        epdf["cluster_hash"].tolist(), epdf["cluster_id"].tolist()
-                    )
-                }
-
-        # dense deterministic ids for new hashes, ordered by hash bytes —
-        # dense_index's digest-prefix-bucket order IS byte order
-        new_hashes = [h for h in hashes if h not in existing]
-        root_of = dict(existing)
-        for i, h in enumerate(new_hashes):
-            root_of[h] = self._max_id + 1 + i
-        self._max_id += len(new_hashes)
-        self._last_assigned_n = len(new_hashes)
-
-        # Arrow-batched uploads (one transfer each, no per-row pickling —
-        # the driver path is licensed up to tens of millions of edges)
-        if new_hashes:
-            self._append(
-                "clusters",
-                self._local_df(
-                    pd.DataFrame(
-                        {
-                            "cluster_id": pd.array(
-                                [root_of[h] for h in new_hashes], dtype="int64"
-                            ),
-                            "cluster_hash": new_hashes,
-                        }
-                    ),
-                    _CLUSTERS,
-                ),
-                materialised=True,
             )
-            if cmirror is not None:
-                # keep the mirror complete across the append it just
-                # invalidated: these parent rows are exactly the delta
-                cmirror.update({root_of[h]: h for h in new_hashes})
-                self._driver_cluster_hashes = cmirror
-            self._clusters_empty = False
-            self._has_parent_clusters = True
+        elif roots:
+            self._append(
+                "resolver_clusters", self._claims_df(step, roots), materialised=True
+            )
+        if rcmirror is not None:
+            # an all-singleton step claims nothing but still registers, so
+            # resolver_assignments stays on the mirror path for it; every
+            # other step's VIEW content is unchanged by either branch above
+            rcmirror[step] = set(roots)
+            self._driver_rc = rcmirror
+        self._step_rows["resolver_clusters"].add(step)
+        self.steps[step] = {
+            "type": "resolver",
+            "fingerprint": hash_to_base64(fingerprint),
+        }
 
-        # the batch's hierarchy rows over EXPANDED leaves, root != leaf
-        # filtered like the distributed path; append-only contains — rows
-        # whose root pre-existed are guaranteed already present and
-        # identical (content addressing), so only newly-assigned roots
-        # contribute appended rows (exactly _hierarchy_insert's semi-join)
+    def _hierarchy_insert_local(self, apdf) -> list[tuple[int, int]]:
+        """Driver twin of :meth:`_hierarchy_insert` over the live clusters
+        and contains mirrors: G4 expansion (a child that is a prior root
+        expands to its leaves — a contains-mirror miss IS a leaf), H5 hash
+        over the members present in ``clusters`` (a parent with none has no
+        root, as in the distributed inner join), insert-if-absent minting,
+        and the ``contains`` append for new roots only. Returns the batch's
+        sorted ``(root, leaf)`` rows. Zero Spark jobs."""
+        import pandas as pd
+
+        kmirror = self._driver_contains
+        cmirror = self._driver_cluster_hashes
+        leaves: dict[int, set[int]] = {}
+        for p, c in zip(apdf["parent_id"].tolist(), apdf["child_id"].tolist()):
+            leaves.setdefault(int(p), set()).update(
+                kmirror.get(int(c)) or (int(c),)
+            )
+        parent_hash = {}
+        for p, ls in leaves.items():
+            member = [cmirror[c] for c in ls if c in cmirror]
+            if member:
+                parent_hash[p] = hash_cluster_leaves(member)
+        first_hierarchy_insert = self._contains_empty
+        watermark = self._max_id
+        root_of = self._mint_clusters_local(parent_hash.values())
         batch_rows = sorted(
             {
-                (root_of[parent_hash[p]], leaf)
-                for p, leaves in expanded.items()
-                for leaf in leaves
-                if root_of[parent_hash[p]] != leaf
+                (root_of[h], leaf)
+                for p, h in parent_hash.items()
+                for leaf in leaves[p]
+                if root_of[h] != leaf
             }
         )
-        new_roots = {root_of[h] for h in new_hashes}
+        # append-only contains: a pre-existing root's rows are already
+        # present and identical (content addressing), so only roots minted
+        # now — ids above the watermark — contribute
         contains_rows = (
             batch_rows
             if first_hierarchy_insert
-            else [rl for rl in batch_rows if rl[0] in new_roots]
+            else [rl for rl in batch_rows if rl[0] > watermark]
         )
         if contains_rows:
             self._append(
@@ -1821,57 +1580,13 @@ class Catalog:
                 ),
                 materialised=True,
             )
-            # keep the contains mirror complete across the append it just
-            # invalidated: these rows are exactly the delta
             per_root: dict[int, list[int]] = {}
-            for r, l in contains_rows:
-                per_root.setdefault(r, []).append(l)
-            kmirror.update(
-                (r, tuple(sorted(ls))) for r, ls in per_root.items()
-            )
-            self._driver_contains = kmirror
+            for r, leaf in contains_rows:
+                per_root.setdefault(r, []).append(leaf)
+            kmirror.update((r, tuple(sorted(ls))) for r, ls in per_root.items())
             self._contains_empty = False
-
-        # resolver claims cover EVERY root of the batch (pre-existing ones
-        # included — _hierarchy_insert's rc comes from batch_contains, not
-        # from the appended delta)
-        rc_rows = sorted({(step, r) for r, _ in batch_rows})
-        # via pandas, not a plain list: the Arrow/pandas path lands as a
-        # LocalRelation (LocalTableScan) with a REAL size estimate, while a
-        # list lands as an RDD scan whose unknown (max) size estimate
-        # forces sort-merge plans onto every downstream retrieval join
-        rc = self._local_df(
-            pd.DataFrame(
-                {
-                    "step": [r[0] for r in rc_rows],
-                    "cluster_id": pd.array(
-                        [r[1] for r in rc_rows], dtype="int64"
-                    ),
-                }
-            ),
-            _RESOLVER,
-        )
-        rcmirror = self._driver_rc
-        if self._step_has_rows("resolver_clusters", "step", step):
-            self._commit_resolver_clusters(
-                self.resolver_clusters.where(F.col("step") != step).unionByName(rc)
-            )
-        else:
-            self._append("resolver_clusters", rc, materialised=True)
-        if rcmirror is not None:
-            # re-establish the claim mirror AFTER the mutation (which
-            # blanket-invalidates): the append branch adds exactly rc_rows
-            # for a step with no prior claims; the rewrite branch replaces
-            # the step's claims with exactly rc_rows while every other
-            # step's VIEW content (and hence mirror entry) is unchanged —
-            # the folded-in tombstones were already subtracted from it
-            rcmirror[step] = {int(r[1]) for r in rc_rows}
-            self._driver_rc = rcmirror
-        self._step_rows["resolver_clusters"].add(step)
-        self.steps[step] = {
-            "type": "resolver",
-            "fingerprint": hash_to_base64(fingerprint),
-        }
+        self._driver_contains = kmirror
+        return batch_rows
 
     def _hierarchy_insert(self, assignments: DataFrame) -> DataFrame:
         """Content-address one batch of ``(parent_id, child_id)`` assignments.
@@ -1988,7 +1703,6 @@ class Catalog:
             )
         self._append("contains", new_contains)
         self._contains_empty = False
-        self._has_parent_clusters = True
         return batch_contains
 
     def _merge_resolver_clusters_delta_local(
@@ -1997,32 +1711,21 @@ class Catalog:
         assignments: DataFrame,
         candidate_roots: DataFrame | None,
     ) -> bool:
-        """Driver-scale :meth:`merge_resolver_clusters_delta` (driver-
-        resident assignments + candidate roots, live mirrors): ZERO Spark
-        jobs instead of the distributed path's three eager checkpoints +
-        appends per micro-batch — the dominant per-batch resolver cost in
-        ``incremental_resolve_stream`` (optimization r13; with the driver
-        CC escape the assignments are already on the driver, so the
-        hierarchy insert's expansion/hash/anti-join jobs re-derive what
-        the mirrors already hold).
-
-        Byte-identical outcome to the distributed path: same G4 expansion
-        (contains mirror), same H5 member hashes over leaves present in
-        clusters — a parent with NO member in clusters drops entirely,
-        exactly the distributed inner join — same insert-if-absent ids
-        dense by hash byte order, same append-only contains (only
-        newly-assigned roots), same claim delta (anti-join via the
-        step's claim mirror, which tracks the VIEW: appends minus
-        tombstones), same O(touched) tombstone retirement through the
-        same ``_tier`` carry. Falls back (returns False) whenever the
-        assignments or candidate roots are not driver-resident or any
-        mirror is dead — a warehouse-scale merge never collects here.
-        Idempotent under batch replay like the distributed path."""
+        """Driver path of :meth:`merge_resolver_clusters_delta` (see the
+        module docstring): :meth:`_hierarchy_insert_local`, then the same
+        claim delta (anti-join via the step's claim mirror, which tracks
+        the VIEW: appends minus tombstones) and the same O(touched)
+        tombstone retirement through ``_tier``. Zero Spark jobs. Returns
+        False to fall through when the assignments or candidate roots are
+        not driver-resident or a mirror is dead."""
         apdf = getattr(assignments, "_mb_local_pdf", None)
-        cmirror = self._driver_cluster_hashes
-        kmirror = self._driver_contains
         rcmirror = self._driver_rc
-        if apdf is None or cmirror is None or kmirror is None or rcmirror is None:
+        if (
+            apdf is None
+            or self._driver_cluster_hashes is None
+            or self._driver_contains is None
+            or rcmirror is None
+        ):
             return False
         rpdf = None
         if candidate_roots is not None:
@@ -2042,90 +1745,7 @@ class Catalog:
             self.steps[step] = meta
             return True
 
-        import pandas as pd
-
-        parents: dict[int, set[int]] = {}
-        for p, c in zip(apdf["parent_id"].tolist(), apdf["child_id"].tolist()):
-            parents.setdefault(int(p), set()).add(int(c))
-        first_hierarchy_insert = self._contains_empty
-        expanded = {
-            p: {leaf for c in members for leaf in (kmirror.get(c) or (c,))}
-            for p, members in parents.items()
-        }
-        # member hashes via the clusters mirror; a parent with zero member
-        # hashes has no root in the distributed inner join — drop it
-        parent_hash = {}
-        for p, leaves in expanded.items():
-            member = [cmirror[c] for c in leaves if c in cmirror]
-            if member:
-                parent_hash[p] = hash_cluster_leaves(member)
-
-        hashes = sorted(set(parent_hash.values()))
-        existing: dict[bytes, int] = {}
-        if not self._clusters_empty:
-            want = set(hashes)
-            existing = {h: i for i, h in cmirror.items() if h in want}
-        new_hashes = [h for h in hashes if h not in existing]
-        root_of = dict(existing)
-        for i, h in enumerate(new_hashes):
-            root_of[h] = self._max_id + 1 + i
-        self._max_id += len(new_hashes)
-        self._last_assigned_n = len(new_hashes)
-
-        if new_hashes:
-            self._append(
-                "clusters",
-                self._local_df(
-                    pd.DataFrame(
-                        {
-                            "cluster_id": pd.array(
-                                [root_of[h] for h in new_hashes], dtype="int64"
-                            ),
-                            "cluster_hash": new_hashes,
-                        }
-                    ),
-                    _CLUSTERS,
-                ),
-                materialised=True,
-            )
-            cmirror.update({root_of[h]: h for h in new_hashes})
-            self._clusters_empty = False
-            self._has_parent_clusters = True
-
-        batch_rows = sorted(
-            {
-                (root_of[parent_hash[p]], leaf)
-                for p in parent_hash
-                for leaf in expanded[p]
-                if root_of[parent_hash[p]] != leaf
-            }
-        )
-        new_roots = {root_of[h] for h in new_hashes}
-        contains_rows = (
-            batch_rows
-            if first_hierarchy_insert
-            else [rl for rl in batch_rows if rl[0] in new_roots]
-        )
-        if contains_rows:
-            self._append(
-                "contains",
-                self._local_df(
-                    pd.DataFrame(contains_rows, columns=["root", "leaf"]).astype(
-                        "int64"
-                    ),
-                    _CONTAINS,
-                ),
-                materialised=True,
-            )
-            per_root: dict[int, list[int]] = {}
-            for r, l in contains_rows:
-                per_root.setdefault(r, []).append(l)
-            kmirror.update(
-                (r, tuple(sorted(ls))) for r, ls in per_root.items()
-            )
-            self._contains_empty = False
-
-        formed = {r for r, _ in batch_rows}
+        formed = {r for r, _ in self._hierarchy_insert_local(apdf)}
         stepset = rcmirror.setdefault(step, set())
         if self._step_has_rows("resolver_clusters", "step", step):
             new_rc = sorted(r for r in formed if r not in stepset)
@@ -2133,17 +1753,7 @@ class Catalog:
             new_rc = sorted(formed)
         if new_rc:
             self._append(
-                "resolver_clusters",
-                self._local_df(
-                    pd.DataFrame(
-                        {
-                            "step": [step] * len(new_rc),
-                            "cluster_id": pd.array(new_rc, dtype="int64"),
-                        }
-                    ),
-                    _RESOLVER,
-                ),
-                materialised=True,
+                "resolver_clusters", self._claims_df(step, new_rc), materialised=True
             )
             stepset.update(new_rc)
         self._step_rows["resolver_clusters"].add(step)
@@ -2156,15 +1766,7 @@ class Catalog:
                 self._tier(
                     self._rc_tombstones,
                     self._rc_tomb_weights,
-                    self._local_df(
-                        pd.DataFrame(
-                            {
-                                "step": [step] * len(retired),
-                                "cluster_id": pd.array(retired, dtype="int64"),
-                            }
-                        ),
-                        _RESOLVER,
-                    ),
+                    self._claims_df(step, retired),
                 )
                 stepset.difference_update(retired)
                 if len(self._rc_tombstones) > _COMPACT_WIDTH:
@@ -2172,10 +1774,8 @@ class Catalog:
                     # content — hence the mirror — is unchanged by the fold
                     self._commit_resolver_clusters(self.resolver_clusters)
 
-        # re-establish every mirror the appends blanket-invalidated: each
-        # was updated with exactly its appended/retired delta above
-        self._driver_cluster_hashes = cmirror
-        self._driver_contains = kmirror
+        # the claim appends dropped the mirror; stepset took exactly their
+        # delta, so it is complete again
         self._driver_rc = rcmirror
         self.steps[step] = meta
         return True

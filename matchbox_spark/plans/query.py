@@ -57,7 +57,7 @@ def resolver_assignments(catalog: Catalog, resolver_step: str) -> DataFrame:
 
     No dedup exchange: ``contains`` rows are globally unique by the
     append-only insert contract (only newly-assigned roots ever append —
-    catalog._hierarchy_insert / _insert_resolver_clusters_local), and
+    catalog._hierarchy_insert / _hierarchy_insert_local), and
     ``resolver_clusters`` filtered to one step is unique by ``cluster_id``,
     so the inner join's ``(leaf_id, root_id)`` output is already distinct.
     The former ``dropDuplicates()`` cost two Exchanges + an aggregate per

@@ -7,11 +7,11 @@ Each test pins an r14 change's CORRECTNESS contract:
 - exact_cosine_pairs' BNLJ condition no longer contains the similarity
   fold (the r13 passenger column was column-pruned away; the r14
   nondeterministic wrapper survives optimization);
-- the packed-uint64 edge mirror answers membership identically to the
-  structured representation across batches;
 - the streaming delta-pair map path honours max_group_size exactly like
   the distributed blocked-superset branch (stop emitting the moment the
   accumulated group crosses the cap; earlier pairs persist).
+
+The packed edge-mirror pin lives in ``tests/test_catalog_driver_path.py``.
 """
 
 from __future__ import annotations
@@ -86,57 +86,6 @@ def test_exact_cosine_pairs_condition_has_no_fold(spark):
     for ln in join_lines:
         assert "aggregate(" not in ln, ln
         assert "zip_with" not in ln, ln
-
-
-def test_edge_mirror_packed_matches_structured(spark, tmp_path):
-    """insert_model_edges_delta's packed-uint64 mirror must anti-join
-    replayed pairs exactly like the structured representation."""
-    import numpy as np
-    import pandas as pd
-
-    from matchbox_spark.plans.catalog import Catalog
-
-    cat = Catalog(spark)
-
-    def edges(rows):
-        pdf = pd.DataFrame(
-            {
-                "left_id": pd.array([r[0] for r in rows], dtype="int64"),
-                "right_id": pd.array([r[1] for r in rows], dtype="int64"),
-                "score": pd.array([1.0] * len(rows), dtype="float32"),
-            }
-        )
-        df = spark.createDataFrame(
-            pdf, "left_id long, right_id long, score float"
-        )
-        df._mb_local_pdf = pdf
-        return df
-
-    cat.insert_model_edges_delta("m", edges([(1, 2), (3, 4)]))
-    acc = cat._driver_step_edges["m"]
-    assert acc.dtype == np.uint64  # small ids pack
-    # replay + one new pair: only the new pair appends
-    cat.insert_model_edges_delta("m", edges([(1, 2), (5, 6)]))
-    got = {
-        (r["left_id"], r["right_id"])
-        for r in cat.model_edges.where(F.col("step") == "m").collect()
-    }
-    assert got == {(1, 2), (3, 4), (5, 6)}
-    # an id past 32 bits unpacks the mirror and keeps answering correctly
-    big = 1 << 40
-    cat.insert_model_edges_delta("m", edges([(big, big + 1), (1, 2)]))
-    acc = cat._driver_step_edges["m"]
-    assert acc.dtype != np.uint64
-    got = {
-        (r["left_id"], r["right_id"])
-        for r in cat.model_edges.where(F.col("step") == "m").collect()
-    }
-    assert got == {(1, 2), (3, 4), (5, 6), (big, big + 1)}
-    # replay after the unpack still appends nothing
-    cat.insert_model_edges_delta("m", edges([(big, big + 1), (3, 4)]))
-    assert (
-        cat.model_edges.where(F.col("step") == "m").count() == 4
-    )
 
 
 @pytest.mark.parametrize("cap", [None, 3])
